@@ -163,11 +163,9 @@ def _tagged_union(events: DataFrame, orders: DataFrame) -> DataFrame:
 
 
 def asof_orderkey_plain(events: DataFrame, orders: DataFrame) -> DataFrame:
-    """The plain union + last-non-null-window shape. Deliberately a
-    function-level TWIN of the c_join_asof query body
-    (queries/relational.py) rather than a refactor of it — the
-    query's verification fingerprint pins that exact source, and the
-    adaptive dispatch needs a callable, not a query."""
+    """The plain union + last-non-null-window shape: one shuffle on the
+    user key. The c_join_asof query and the cold lane of the adaptive
+    dispatch both run it."""
     w = (
         Window.partitionBy("k")
         .orderBy("t", "is_event", "o_key")

@@ -107,11 +107,9 @@ def lag_prev_hotsplit(
 
 
 def lag_prev_plain(events: DataFrame) -> DataFrame:
-    """The plain one-window shape. Deliberately a function-level TWIN
-    of the c_window_lag query body (queries/relational.py) rather
-    than a refactor of it — the query's verification fingerprint pins
-    that exact source, and the adaptive dispatch needs a callable,
-    not a query."""
+    """The plain one-window shape: one shuffle on the user key. The
+    c_window_lag query and the cold lane of the adaptive dispatch both
+    run it."""
     w = Window.partitionBy("user_id").orderBy("event_id")
     return events.select(
         "event_id", "user_id", "value", F.lag("value").over(w).alias("prev_value")

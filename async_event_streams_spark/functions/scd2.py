@@ -118,11 +118,9 @@ def scd2_intervals(
 
 def scd2_intervals_plain(events: DataFrame) -> DataFrame:
     """The plain two-window shape: LAG change-detection + LEAD
-    interval close riding one user-keyed exchange. Deliberately a
-    function-level TWIN of the c_scd2_intervals query body
-    (queries/relational.py) rather than a refactor of it — the
-    query's verification fingerprint pins that exact source, and the
-    adaptive dispatch needs a callable, not a query."""
+    interval close riding one user-keyed exchange. The
+    c_scd2_intervals query and the cold lane of the adaptive dispatch
+    both run it."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     starts = (
         events.select(

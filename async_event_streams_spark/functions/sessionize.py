@@ -214,11 +214,9 @@ def sessionize_plain(
     events: DataFrame, gap_sec: int = DEFAULT_GAP_SEC
 ) -> DataFrame:
     """The plain lag+cumsum shape: both window functions share one
-    user-keyed exchange, then a slim per-session rollup. Deliberately
-    a function-level TWIN of the c_sessionize_gaps query body
-    (queries/relational.py) rather than a refactor of it — the query's
-    verification fingerprint pins that exact source, and the adaptive
-    dispatch needs a callable, not a query."""
+    user-keyed exchange, then a slim per-session rollup. The
+    c_sessionize_gaps query and the cold lane of the adaptive dispatch
+    both run it."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # MICROSECOND-exact gap (r11, caught by the true-sf1 sweep): the
     # oracle's epoch() and Spark's own F.session_window both keep

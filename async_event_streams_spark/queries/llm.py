@@ -36,7 +36,7 @@ from ..functions.text import (
     tokens,
 )
 from ..tables import table
-from ..util import artifact, cap_buckets, materialize
+from ..util import aqe_disabled, artifact, cap_buckets, materialize
 from . import query
 
 # DuckDB-side twins of functions/text.py (kept adjacent so any change to
@@ -2056,14 +2056,10 @@ def x_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # argmax rounds below are tiny bounded jobs over the pinned vocab,
     # where AQE's per-stage re-planning only adds latency (the
     # x_kcenter_sample precedent, r6; measured here 3.0 -> 2.4 s
-    # min-of-3 at sf0.1). Restored afterwards; single-driver contract.
+    # min-of-3 at sf0.1).
     cur.count()
-    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with aqe_disabled(spark):
         return _bpe_merge_rounds(spark, cur)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 
 
 def _bpe_merge_rounds(spark: SparkSession, cur: DataFrame) -> DataFrame:
@@ -4482,14 +4478,9 @@ def x_kcenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count needed (it cost one extra job per warm call).
     # The K rounds are tiny jobs over pinned inputs; AQE's per-stage
     # re-planning only adds latency to them (measured 3.8 → 3.1 s for
-    # the whole loop at sf0.1). Restored afterwards. (Single-driver
-    # contract: no concurrent query shares this session mid-toggle.)
-    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    # the whole loop at sf0.1).
+    with aqe_disabled(spark):
         return _kcenter_rounds(spark, edges, v)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 
 
 def _kcenter_rounds(spark: SparkSession, edges: DataFrame, v: DataFrame) -> DataFrame:
@@ -4846,7 +4837,9 @@ def _triangle_census(
     (the LPA/PageRank discipline). `scope`: optional artifact key
     prefix — when given, the degree table and the oriented adjacency
     (pure functions of `und`) are pinned build-once per session
-    instead of per call."""
+    instead of per call. The memo trusts the key, so a scope must
+    uniquely determine `und`: two different edge lists under one
+    scope would share the first one's degrees and orientation."""
 
     def pin(suffix: str, build):
         if scope is None:
@@ -4970,17 +4963,19 @@ def x_knn_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r14; previously rebuilt per call: distinct + degree groupBy +
     # two degree joins + three checkpoints each run). The wedge join,
     # closing join and counts below stay per-call.
+    # The edge artifact is fetched outside the und build so that
+    # artifact_build_secs() times each key once: nested, a cold
+    # knn_tri_und build would also count the whole edge-list build.
+    edges = artifact(
+        spark, f"{sf_dir}:knn_edges", lambda: x_knn_graph(spark, sf_dir)
+    )
     und = artifact(
         spark,
         f"{sf_dir}:knn_tri_und",
-        lambda: artifact(
-            spark, f"{sf_dir}:knn_edges", lambda: x_knn_graph(spark, sf_dir)
-        )
-        .select(
+        lambda: edges.select(
             F.least("vec_id", "neighbor_id").alias("u"),
             F.greatest("vec_id", "neighbor_id").alias("v"),
-        )
-        .distinct(),
+        ).distinct(),
     )
     deg, tcnt = _triangle_census(spark, f"{sf_dir}:knn_tri", und)
     vecs = table(spark, sf_dir, "embeddings").select("vec_id")

@@ -17,6 +17,7 @@ Determinism discipline for the DuckDB differential oracle:
 
 from __future__ import annotations
 
+import hashlib
 import weakref
 
 import pandas as pd
@@ -585,9 +586,18 @@ def c_agg_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_l = case_over_groups(lambda r: r["n"])
         pc = _cents(F.col("l_extendedprice"))
         clamped = F.when(pc < lo_c, F.lit(-1)).when(pc > hi_c, F.lit(-2)).otherwise(pc)
+        # The histogram is clamped to the sketch's bracket, so its key
+        # names the bracket: a sketch rebuilt after eviction may bracket
+        # differently, and a histogram clamped to the old bracket would
+        # miscount the band.
+        brackets = sorted(
+            (g, cents_of(r["br"][0]), cents_of(r["br"][2]))
+            for g, r in groups.items()
+        )
+        br_tag = hashlib.sha1(repr(brackets).encode()).hexdigest()[:12]
         hist = artifact(
             spark,
-            f"aq_hist:{sf_dir}",
+            f"aq_hist:{sf_dir}:{br_tag}",
             lambda: li.select("l_returnflag", clamped.alias("pc"))
             .groupBy("l_returnflag", "pc")
             .agg(F.count(F.lit(1)).alias("cnt")),
@@ -932,16 +942,20 @@ def c_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "c_join_asof",
-    oracle=(
-        "SELECT e.event_id, e.user_id, "
-        "(SELECT o.o_orderkey FROM orders o "
-        " WHERE o.o_custkey = e.user_id AND o.o_orderdate <= e.ts "
-        " ORDER BY o.o_orderdate DESC, o.o_orderkey DESC LIMIT 1) AS asof_orderkey "
-        "FROM events e"
-    ),
+# One oracle for the whole as-of family: it states the simple semantics
+# (latest prior order per event, correlated subquery), so the
+# differential check proves the bucket-and-stitch and adaptive shapes
+# equal to the plain as-of join.
+_ASOF_ORACLE = (
+    "SELECT e.event_id, e.user_id, "
+    "(SELECT o.o_orderkey FROM orders o "
+    " WHERE o.o_custkey = e.user_id AND o.o_orderdate <= e.ts "
+    " ORDER BY o.o_orderdate DESC, o.o_orderkey DESC LIMIT 1) AS asof_orderkey "
+    "FROM events e"
 )
+
+
+@query("c_join_asof", oracle=_ASOF_ORACLE)
 def c_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (each event ⋈ latest prior order of the same user),
     Spark-native via the union + last-non-null-window technique: tag both
@@ -949,52 +963,14 @@ def c_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's timeline. ONE shuffle on the join key — no row explosion, no
     range cross-product — which is the 100 TB-safe as-of strategy.
     Ties (equal o_orderdate) break toward the larger o_orderkey."""
-    events = table(spark, sf_dir, "events")
-    orders = table(spark, sf_dir, "orders")
-    e = events.select(
-        F.col("user_id").alias("k"),
-        F.col("ts").alias("t"),
-        F.lit(1).alias("is_event"),
-        F.col("event_id"),
-        F.lit(None).cast("long").alias("o_key"),
-    )
-    o = orders.select(
-        F.col("o_custkey").alias("k"),
-        F.col("o_orderdate").alias("t"),
-        F.lit(0).alias("is_event"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.col("o_orderkey").alias("o_key"),
-    )
-    # Orders sort before events at the same timestamp (<= semantics); among
-    # equal-time orders the larger key sorts last, so last() picks it.
-    w = (
-        Window.partitionBy("k")
-        .orderBy("t", "is_event", "o_key")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    merged = e.unionByName(o).withColumn(
-        "asof_orderkey", F.last("o_key", ignorenulls=True).over(w)
-    )
-    return merged.filter(F.col("is_event") == 1).select(
-        "event_id", F.col("k").alias("user_id"), "asof_orderkey"
+    from ..functions.asof import asof_orderkey_plain
+
+    return asof_orderkey_plain(
+        table(spark, sf_dir, "events"), table(spark, sf_dir, "orders")
     )
 
 
-@query(
-    "c_join_asof_bucketed",
-    # Same oracle SQL as c_join_asof ON PURPOSE: the oracle states the
-    # simple semantics (latest prior order per event, correlated
-    # subquery); the Spark side is the skew-resistant bucket-and-stitch
-    # implementation, so the differential check proves it ≡ the plain
-    # as-of join.
-    oracle=(
-        "SELECT e.event_id, e.user_id, "
-        "(SELECT o.o_orderkey FROM orders o "
-        " WHERE o.o_custkey = e.user_id AND o.o_orderdate <= e.ts "
-        " ORDER BY o.o_orderdate DESC, o.o_orderkey DESC LIMIT 1) AS asof_orderkey "
-        "FROM events e"
-    ),
-)
+@query("c_join_asof_bucketed", oracle=_ASOF_ORACLE)
 def c_join_asof_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-resistant as-of join (functions/asof.py): the same output
     contract as c_join_asof — each event ⋈ latest prior order of the
@@ -1019,19 +995,7 @@ def c_join_asof_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "c_join_asof_adaptive",
-    # Same oracle SQL as c_join_asof / c_join_asof_bucketed: the
-    # adaptive hot/cold split can route rows through either proven
-    # shape, and the differential check pins the merged output.
-    oracle=(
-        "SELECT e.event_id, e.user_id, "
-        "(SELECT o.o_orderkey FROM orders o "
-        " WHERE o.o_custkey = e.user_id AND o.o_orderdate <= e.ts "
-        " ORDER BY o.o_orderdate DESC, o.o_orderkey DESC LIMIT 1) AS asof_orderkey "
-        "FROM events e"
-    ),
-)
+@query("c_join_asof_adaptive", oracle=_ASOF_ORACLE)
 def c_join_asof_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION as-of entry point (functions/asof.asof_orderkey):
     hot/cold-split dispatch. A bounded probe (≤ 1/threshold keys by
@@ -1346,33 +1310,24 @@ def c_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "c_window_lag",
-    oracle=(
-        "SELECT event_id, user_id, value, "
-        "LAG(value) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_value "
-        "FROM events"
-    ),
+# One oracle for the whole LAG family: it states the simple semantics
+# (one per-user LAG), so the differential check proves the
+# bucket-and-stitch and adaptive shapes equal to the plain window.
+_LAG_ORACLE = (
+    "SELECT event_id, user_id, value, "
+    "LAG(value) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_value "
+    "FROM events"
 )
+
+
+@query("c_window_lag", oracle=_LAG_ORACLE)
 def c_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    return table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "value", F.lag("value").over(w).alias("prev_value")
-    )
+    from ..functions.lagstitch import lag_prev_plain
+
+    return lag_prev_plain(table(spark, sf_dir, "events"))
 
 
-@query(
-    "c_window_lag_bucketed",
-    # Same oracle SQL as c_window_lag ON PURPOSE: the oracle states the
-    # simple semantics (one per-user LAG); the Spark side is the
-    # skew-resistant bucket-and-stitch implementation, so the
-    # differential check proves it ≡ the plain window.
-    oracle=(
-        "SELECT event_id, user_id, value, "
-        "LAG(value) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_value "
-        "FROM events"
-    ),
-)
+@query("c_window_lag_bucketed", oracle=_LAG_ORACLE)
 def c_window_lag_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-resistant per-user LAG (functions/lagstitch.py): the same
     output contract as c_window_lag computed as bucket-and-stitch —
@@ -1393,17 +1348,7 @@ def c_window_lag_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lag_prev_bucketed(table(spark, sf_dir, "events"))
 
 
-@query(
-    "c_window_lag_adaptive",
-    # Same oracle SQL as c_window_lag / c_window_lag_bucketed: the
-    # adaptive hot/cold split can route rows through either proven
-    # shape, and the differential check pins the merged output.
-    oracle=(
-        "SELECT event_id, user_id, value, "
-        "LAG(value) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_value "
-        "FROM events"
-    ),
-)
+@query("c_window_lag_adaptive", oracle=_LAG_ORACLE)
 def c_window_lag_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION per-user LAG entry point
     (functions/lagstitch.lag_prev): hot/cold-split dispatch — hot
@@ -2621,27 +2566,31 @@ def c_window_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "c_sessionize_gaps",
-    oracle=(
-        "WITH e AS ("
-        "  SELECT user_id, event_id, ts,"
-        "    CASE WHEN lag(ts) OVER w IS NULL"
-        "          OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1"
-        "         ELSE 0 END AS new_s"
-        "  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"
-        "), s AS ("
-        "  SELECT user_id, ts,"
-        "    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id"
-        "      ROWS UNBOUNDED PRECEDING) AS session_id"
-        "  FROM e)"
-        "SELECT user_id, CAST(session_id AS BIGINT) AS session_id, "
-        "CAST(COUNT(*) AS BIGINT) AS n_events, "
-        "CAST(MIN(ts) AS TIMESTAMP) AS session_start, "
-        "CAST(MAX(ts) AS TIMESTAMP) AS session_end "
-        "FROM s GROUP BY user_id, session_id"
-    ),
+# One oracle for the whole sessionize family: it states the simple
+# semantics (one lag+cumsum window), so the differential check proves
+# the bucket-and-stitch and adaptive shapes equal to the plain
+# sessionizer.
+_SESSIONIZE_ORACLE = (
+    "WITH e AS ("
+    "  SELECT user_id, event_id, ts,"
+    "    CASE WHEN lag(ts) OVER w IS NULL"
+    "          OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1"
+    "         ELSE 0 END AS new_s"
+    "  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"
+    "), s AS ("
+    "  SELECT user_id, ts,"
+    "    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id"
+    "      ROWS UNBOUNDED PRECEDING) AS session_id"
+    "  FROM e)"
+    "SELECT user_id, CAST(session_id AS BIGINT) AS session_id, "
+    "CAST(COUNT(*) AS BIGINT) AS n_events, "
+    "CAST(MIN(ts) AS TIMESTAMP) AS session_start, "
+    "CAST(MAX(ts) AS TIMESTAMP) AS session_end "
+    "FROM s GROUP BY user_id, session_id"
 )
+
+
+@query("c_sessionize_gaps", oracle=_SESSIONIZE_ORACLE)
 def c_sessionize_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch gap-sessionization with explicit session NUMBERING (the
     lag + cumulative-sum pattern): a user\'s events start a new session
@@ -2654,59 +2603,12 @@ def c_sessionize_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup is a partial-agg shuffle of slim rows. Tie-break on
     event_id keeps the row order — and therefore the numbering —
     engine-independent."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # MICROSECOND-exact gap (r11, caught by the true-sf1 sweep): the
-    # oracle's epoch() keeps sub-second precision — and so does
-    # F.session_window (c_stream_session agreed with the oracle at sf1
-    # while this lane was 14 sessions short) — so the gap must be
-    # differenced at full precision, not after per-timestamp
-    # truncation to seconds, which mis-classifies gaps inside
-    # (1800, 1801). Timezone cancels in the difference.
-    us = lambda c: F.unix_micros(c.cast("timestamp"))  # noqa: E731
-    gap = us(F.col("ts")) - us(F.lag("ts").over(w))
-    new_s = F.when(gap.isNull() | (gap > 1800 * 1_000_000), 1).otherwise(0)
-    sessions = (
-        table(spark, sf_dir, "events")
-        .select("user_id", "event_id", "ts")
-        .withColumn(
-            "session_id",
-            F.sum(new_s).over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-    )
-    return sessions.groupBy("user_id", "session_id").agg(
-        F.count("*").cast("long").alias("n_events"),
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-    )
+    from ..functions.sessionize import sessionize_plain
+
+    return sessionize_plain(table(spark, sf_dir, "events"))
 
 
-@query(
-    "c_sessionize_bucketed",
-    # Same oracle SQL as c_sessionize_gaps ON PURPOSE: the oracle states
-    # the simple semantics (one lag+cumsum window); the Spark side is
-    # the skew-resistant two-phase implementation, so the differential
-    # check proves bucket-and-stitch ≡ the plain sessionizer.
-    oracle=(
-        "WITH e AS ("
-        "  SELECT user_id, event_id, ts,"
-        "    CASE WHEN lag(ts) OVER w IS NULL"
-        "          OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1"
-        "         ELSE 0 END AS new_s"
-        "  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"
-        "), s AS ("
-        "  SELECT user_id, ts,"
-        "    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id"
-        "      ROWS UNBOUNDED PRECEDING) AS session_id"
-        "  FROM e)"
-        "SELECT user_id, CAST(session_id AS BIGINT) AS session_id, "
-        "CAST(COUNT(*) AS BIGINT) AS n_events, "
-        "CAST(MIN(ts) AS TIMESTAMP) AS session_start, "
-        "CAST(MAX(ts) AS TIMESTAMP) AS session_end "
-        "FROM s GROUP BY user_id, session_id"
-    ),
-)
+@query("c_sessionize_bucketed", oracle=_SESSIONIZE_ORACLE)
 def c_sessionize_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-resistant sessionization (functions/sessionize.py): the
     same output contract as c_sessionize_gaps — per-user running
@@ -2732,30 +2634,7 @@ def c_sessionize_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "c_sessionize_adaptive",
-    # Same oracle SQL as c_sessionize_gaps / c_sessionize_bucketed:
-    # the adaptive hot/cold split routes rows through either proven
-    # shape, and the differential check pins the merged output.
-    oracle=(
-        "WITH e AS ("
-        "  SELECT user_id, event_id, ts,"
-        "    CASE WHEN lag(ts) OVER w IS NULL"
-        "          OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1"
-        "         ELSE 0 END AS new_s"
-        "  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"
-        "), s AS ("
-        "  SELECT user_id, ts,"
-        "    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id"
-        "      ROWS UNBOUNDED PRECEDING) AS session_id"
-        "  FROM e)"
-        "SELECT user_id, CAST(session_id AS BIGINT) AS session_id, "
-        "CAST(COUNT(*) AS BIGINT) AS n_events, "
-        "CAST(MIN(ts) AS TIMESTAMP) AS session_start, "
-        "CAST(MAX(ts) AS TIMESTAMP) AS session_end "
-        "FROM s GROUP BY user_id, session_id"
-    ),
-)
+@query("c_sessionize_adaptive", oracle=_SESSIONIZE_ORACLE)
 def c_sessionize_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION sessionize entry point
     (functions/sessionize.sessionize): hot/cold-split dispatch — hot
@@ -2906,25 +2785,28 @@ def c_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "c_scd2_intervals",
-    oracle=(
-        "WITH ordered AS ("
-        "  SELECT user_id, event_type, ts, event_id, "
-        "  LAG(event_type) OVER w AS prev_type "
-        "  FROM events WINDOW w AS "
-        "  (PARTITION BY user_id ORDER BY ts, event_id)), "
-        "starts AS ("
-        "  SELECT user_id, event_type, ts AS valid_from, event_id "
-        "  FROM ordered "
-        "  WHERE prev_type IS NULL OR event_type <> prev_type) "
-        "SELECT user_id, event_type, valid_from, "
-        "LEAD(valid_from) OVER w2 AS valid_to, "
-        "CAST(LEAD(valid_from) OVER w2 IS NULL AS BOOLEAN) AS is_current "
-        "FROM starts WINDOW w2 AS "
-        "(PARTITION BY user_id ORDER BY valid_from, event_id)"
-    ),
+# One oracle for the whole SCD2 family: it states the simple semantics
+# (two user-keyed windows), so the differential check proves the
+# bucket-and-stitch and adaptive shapes equal to the plain SCD2 build.
+_SCD2_ORACLE = (
+    "WITH ordered AS ("
+    "  SELECT user_id, event_type, ts, event_id, "
+    "  LAG(event_type) OVER w AS prev_type "
+    "  FROM events WINDOW w AS "
+    "  (PARTITION BY user_id ORDER BY ts, event_id)), "
+    "starts AS ("
+    "  SELECT user_id, event_type, ts AS valid_from, event_id "
+    "  FROM ordered "
+    "  WHERE prev_type IS NULL OR event_type <> prev_type) "
+    "SELECT user_id, event_type, valid_from, "
+    "LEAD(valid_from) OVER w2 AS valid_to, "
+    "CAST(LEAD(valid_from) OVER w2 IS NULL AS BOOLEAN) AS is_current "
+    "FROM starts WINDOW w2 AS "
+    "(PARTITION BY user_id ORDER BY valid_from, event_id)"
 )
+
+
+@query("c_scd2_intervals", oracle=_SCD2_ORACLE)
 def c_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension (type 2) build from an event log: per
     user, collapse consecutive repeats of event_type and emit validity
@@ -2937,57 +2819,12 @@ def c_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst plans no second Exchange); change detection is
     LAG-compare, interval close is LEAD. The unique event_id
     tie-break makes same-timestamp orderings engine-identical."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    starts = (
-        table(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            "event_type",
-            "ts",
-            "event_id",
-            F.lag("event_type").over(w).alias("prev_type"),
-        )
-        .filter(
-            F.col("prev_type").isNull()
-            | (F.col("event_type") != F.col("prev_type"))
-        )
-        .select(
-            "user_id", "event_type", F.col("ts").alias("valid_from"), "event_id"
-        )
-    )
-    w2 = Window.partitionBy("user_id").orderBy("valid_from", "event_id")
-    return starts.select(
-        "user_id",
-        "event_type",
-        "valid_from",
-        F.lead("valid_from").over(w2).alias("valid_to"),
-        F.lead("valid_from").over(w2).isNull().alias("is_current"),
-    )
+    from ..functions.scd2 import scd2_intervals_plain
+
+    return scd2_intervals_plain(table(spark, sf_dir, "events"))
 
 
-@query(
-    "c_scd2_bucketed",
-    # Same oracle SQL as c_scd2_intervals ON PURPOSE: the oracle states
-    # the simple semantics (two user-keyed windows); the Spark side is
-    # the skew-resistant bucket-and-stitch implementation, so the
-    # differential check proves it ≡ the plain SCD2 build.
-    oracle=(
-        "WITH ordered AS ("
-        "  SELECT user_id, event_type, ts, event_id, "
-        "  LAG(event_type) OVER w AS prev_type "
-        "  FROM events WINDOW w AS "
-        "  (PARTITION BY user_id ORDER BY ts, event_id)), "
-        "starts AS ("
-        "  SELECT user_id, event_type, ts AS valid_from, event_id "
-        "  FROM ordered "
-        "  WHERE prev_type IS NULL OR event_type <> prev_type) "
-        "SELECT user_id, event_type, valid_from, "
-        "LEAD(valid_from) OVER w2 AS valid_to, "
-        "CAST(LEAD(valid_from) OVER w2 IS NULL AS BOOLEAN) AS is_current "
-        "FROM starts WINDOW w2 AS "
-        "(PARTITION BY user_id ORDER BY valid_from, event_id)"
-    ),
-)
+@query("c_scd2_bucketed", oracle=_SCD2_ORACLE)
 def c_scd2_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-resistant SCD type-2 build (functions/scd2.py): the same
     output contract as c_scd2_intervals — per-user validity intervals
@@ -3009,28 +2846,7 @@ def c_scd2_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scd2_intervals_bucketed(table(spark, sf_dir, "events"))
 
 
-@query(
-    "c_scd2_adaptive",
-    # Same oracle SQL as c_scd2_intervals / c_scd2_bucketed: the
-    # adaptive hot/cold split routes rows through either proven shape,
-    # and the differential check pins the merged output.
-    oracle=(
-        "WITH ordered AS ("
-        "  SELECT user_id, event_type, ts, event_id, "
-        "  LAG(event_type) OVER w AS prev_type "
-        "  FROM events WINDOW w AS "
-        "  (PARTITION BY user_id ORDER BY ts, event_id)), "
-        "starts AS ("
-        "  SELECT user_id, event_type, ts AS valid_from, event_id "
-        "  FROM ordered "
-        "  WHERE prev_type IS NULL OR event_type <> prev_type) "
-        "SELECT user_id, event_type, valid_from, "
-        "LEAD(valid_from) OVER w2 AS valid_to, "
-        "CAST(LEAD(valid_from) OVER w2 IS NULL AS BOOLEAN) AS is_current "
-        "FROM starts WINDOW w2 AS "
-        "(PARTITION BY user_id ORDER BY valid_from, event_id)"
-    ),
-)
+@query("c_scd2_adaptive", oracle=_SCD2_ORACLE)
 def c_scd2_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION SCD2 entry point (functions/scd2.scd2_intervals):
     hot/cold-split dispatch — hot users' change logs through
@@ -4759,72 +4575,7 @@ def c_anomaly_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     (window aggregates over the same partitioning — no second
     shuffle, no join); skew exposure equals c_ewma's, and the same
     framestitch lane applies to the fold if a hot user bites."""
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    wf = w.rowsBetween(-(_EWMA_L - 1), Window.currentRow)
-    wp = Window.partitionBy("user_id")
-    e = table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.floor(F.col("value") * 1000000).cast("long").alias("x_micro"),
-    )
-    vals = F.collect_list("x_micro").over(wf)
-    num = F.aggregate(
-        vals,
-        F.struct(
-            F.lit(0).cast("long").alias("num"), F.lit(1).cast("long").alias("wt")
-        ),
-        lambda acc, v: F.struct(
-            (acc.num + v * acc.wt).alias("num"), (acc.wt * 2).alias("wt")
-        ),
-        lambda acc: acc.num,
-    )
-    den = F.pow(F.lit(2.0), F.size(vals)).cast("long") - 1
-    p = e.select(
-        "user_id",
-        "event_id",
-        "x_micro",
-        num.alias("num"),
-        den.alias("den"),
-    ).select(
-        "user_id",
-        "event_id",
-        "x_micro",
-        F.expr(
-            "CAST(CAST(num AS DECIMAL(38,0)) * 1000000 DIV den AS BIGINT)"
-        ).alias("ewma_pico"),
-    )
-    l = p.select(
-        "user_id",
-        "event_id",
-        "x_micro",
-        (F.col("x_micro") * 1000000 - F.lag("ewma_pico").over(w)).alias(
-            "residual_pico"
-        ),
-        F.count(F.lit(1)).over(wp).cast("long").alias("n"),
-        F.sum(F.col("x_micro").cast("decimal(38,0)"))
-        .over(wp)
-        .cast("double")
-        .alias("s"),
-        F.sum(
-            F.col("x_micro").cast("decimal(19,0)")
-            * F.col("x_micro").cast("decimal(19,0)")
-        )
-        .over(wp)
-        .cast("double")
-        .alias("q"),
-    )
-    rp = F.col("residual_pico").cast("double") / 1000000
-    var = (F.col("q") - F.col("s") * F.col("s") / F.col("n")) / F.col("n")
-    return l.select(
-        "user_id",
-        "event_id",
-        "x_micro",
-        F.col("residual_pico").cast("long").alias("residual_pico"),
-        F.when(F.col("residual_pico").isNull(), F.lit(0))
-        .otherwise((rp * rp > F.lit(4.0) * var).cast("int"))
-        .cast("int")
-        .alias("anomaly"),
-    )
+    return _anomaly_plain_on(_ewma_events(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -5503,13 +5254,11 @@ def c_join_interval_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _anomaly_plain_on(e: DataFrame) -> DataFrame:
-    """Function twin of the c_anomaly_ewma body over an arbitrary
-    (user_id, event_id, x_micro) frame — the lagstitch `lag_prev_plain`
-    discipline: a callable twin rather than a refactor, so the
-    registered query keeps its verification fingerprint. The adaptive
+    """The plain anomaly shape over an (user_id, event_id, x_micro)
+    frame: three window aggregates on one user-keyed exchange. The
+    c_anomaly_ewma query runs it over the whole corpus; the adaptive
     dispatch routes COLD users here (and whole uniform corpora: with
-    no hot key this IS the optimal shape — three window aggregates on
-    one user-keyed exchange)."""
+    no hot key this IS the optimal shape)."""
     w = Window.partitionBy("user_id").orderBy("event_id")
     wf = w.rowsBetween(-(_EWMA_L - 1), Window.currentRow)
     wp = Window.partitionBy("user_id")
@@ -5658,7 +5407,7 @@ def c_anomaly_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`_anomaly_stitched_on`: framestitch frame fold, lagstitch
     forecast LAG on the derived EWMA rows, map-side-combined groupBy
     moments), everyone else rides the plain three-window shape
-    (`_anomaly_plain_on`, the c_anomaly_ewma twin). The anomaly flag
+    (`_anomaly_plain_on`, c_anomaly_ewma's shape). The anomaly flag
     tests each user against their OWN moments, so the per-user split
     is exact; all shapes share _ANOMALY_ORACLE, so dispatch can change
     the plan, never the answer. Measured at the 100× probe: uniform

@@ -65,12 +65,12 @@ def _read_dirs(spark: SparkSession, dirs: list[str]) -> DataFrame | None:
 def bucket_edges(b: DataFrame, k: int) -> DataFrame:
     """(vec_id, e, bucket) → each vector's top-k same-bucket cosine
     neighbors, carrying the bucket column for the version sidecar.
-    Deliberately a TWIN of the x_knn_graph join body (queries/llm.py)
-    rather than a refactor of it — the query's verification
-    fingerprint pins that exact source; identical tie-breaks
-    (9-decimal score rounding desc, then neighbor_id) keep the two
-    bit-equal, which the stream==batch test asserts against the
-    registered query itself."""
+    The same bucket self-join as x_knn_graph (queries/llm.py), kept
+    separate because the stream's vector state has no pinned norm
+    column: it scores with cosine(), which the batch's pinned-norm
+    quotient equals bit for bit. Identical tie-breaks (9-decimal score
+    rounding desc, then neighbor_id) keep the two bit-equal, which the
+    stream==batch test asserts against the registered query itself."""
     a = b.alias("a")
     x = b.select(
         F.col("vec_id").alias("neighbor_id"),

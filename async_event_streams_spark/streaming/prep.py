@@ -47,10 +47,8 @@ mid-stream keeps its earlier pairs. On flood-free corpora (all test
 corpora here) the two are exactly equal; under a flood the stream is a
 superset, one-sided by construction.
 
-Constants are TWINS of the registered query's (queries/llm.py
-_DECON_MOD/_DECON_K/_VERIFY_THRESHOLD/_SPLIT_SEED/_SPLIT_CASE — the
-query's verification fingerprint pins that exact source), so stream
-and batch agree bit-for-bit; `tests/test_streaming_prep.py` asserts
+Constants are imported from the registered query (queries/llm.py), so
+stream and batch agree bit-for-bit; `tests/test_streaming_prep.py` asserts
 the snapshot equals the batch twin after every wave, across a
 full-chain restart, and against the registered x_prep_pipeline itself
 once the whole documents table has been published.
@@ -71,19 +69,16 @@ from ..functions.text import (
     tokens,
 )
 from ..pipelines import quality_filter
+from ..queries.llm import (
+    _DECON_K as DECON_K,
+    _DECON_MOD as DECON_MOD,
+    _LSH_BUCKET_CAP as LSH_BUCKET_CAP,
+    _SPLIT_CASE as SPLIT_CASE,
+    _SPLIT_SEED as SPLIT_SEED,
+    _VERIFY_THRESHOLD as VERIFY_THRESHOLD,
+)
 from ..util import cap_buckets, materialize
 from .state import reject_partitioned_source, reject_stale_state, state_dirs
-
-# Twins of queries/llm.py's pinned constants (see module docstring).
-DECON_MOD = 97
-DECON_K = 4
-VERIFY_THRESHOLD = 0.8
-SPLIT_SEED = "split:"
-SPLIT_CASE = (
-    "CASE WHEN __h <= 'b' THEN 'train' "
-    "WHEN __h <= 'd' THEN 'val' ELSE 'test' END"
-)
-LSH_BUCKET_CAP = 64
 
 _ROOTS = ("raw", "pool", "bench", "pgrams", "hits", "bands", "sh", "pairs")
 

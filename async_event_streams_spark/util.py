@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -147,3 +149,18 @@ def artifact_build_secs() -> dict[str, float]:
     process (forced inside artifact(), so the figure is the real
     materialization cost, not plan-construction time)."""
     return dict(_ARTIFACT_BUILD_SECS)
+
+
+@contextmanager
+def aqe_disabled(spark):
+    """Turn adaptive query execution off for the block, then restore
+    the session's previous setting, also when the block raises. For
+    loops of tiny bounded jobs over pinned inputs, where AQE's
+    per-stage re-planning only adds latency. Single-driver contract:
+    no concurrent query may share the session mid-toggle."""
+    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)

@@ -1,6 +1,8 @@
 """util.artifact memo discipline: build-once/hit-after, LRU bound,
 explicit clear, and the event log bench.py uses to attribute warm-memo
-timings (round-2 advice: eviction + visibility for the artifact cache)."""
+timings (round-2 advice: eviction + visibility for the artifact cache);
+artifact keys and build timing of the queries that use it; and the
+util.aqe_disabled toggle."""
 
 from __future__ import annotations
 
@@ -64,6 +66,76 @@ def test_clear_artifacts_releases_session_entries(spark):
     assert clear_artifacts(spark) >= 1
     artifact(spark, "t:x", _builds_counter(spark, "t:x", calls))
     assert calls == ["t:x", "t:x"]  # rebuilt after clear
+
+
+def test_aq_hist_rebuilds_when_sketch_bracket_changes(spark, sf_dir):
+    """The approx-quantile histogram is clamped to the sketch's
+    bracket, so a sketch rebuilt with another bracket (after eviction)
+    must not reuse the histogram clamped to the old one."""
+    from async_event_streams_spark.queries import QUERIES
+
+    clear_artifacts(spark)
+    try:
+        QUERIES["c_agg_approx_quantile"](spark, sf_dir)
+        sk_key = (id(spark), f"aq_sketch:{sf_dir}")
+        sk = util._ARTIFACTS[sk_key][1]
+        narrow = [(r["l_returnflag"], [r["br"][1]] * 3, r["n"]) for r in sk.collect()]
+        util._ARTIFACTS[sk_key] = (spark, spark.createDataFrame(narrow, sk.schema))
+        drain_artifact_events()
+        QUERIES["c_agg_approx_quantile"](spark, sf_dir)
+        ev = drain_artifact_events()
+        assert any(k.startswith("aq_hist:") and kind == "build" for k, kind in ev), ev
+    finally:
+        clear_artifacts(spark)  # drop the doctored sketch
+
+
+def test_knn_triangle_build_time_excludes_edge_build(spark, sf_dir, monkeypatch):
+    """artifact_build_secs() times each key once: a cold x_knn_triangles
+    run must not charge the kNN edge-list build to knn_tri_und."""
+    import time
+
+    from async_event_streams_spark.queries import llm
+    from async_event_streams_spark.util import artifact_build_secs
+
+    real = llm.x_knn_graph
+
+    def slow_knn_graph(spark, sf_dir):
+        time.sleep(1.0)
+        return real(spark, sf_dir)
+
+    monkeypatch.setattr(llm, "x_knn_graph", slow_knn_graph)
+    clear_artifacts(spark)
+    before = artifact_build_secs()
+    llm.x_knn_triangles(spark, sf_dir)
+    after = artifact_build_secs()
+
+    def spent(key):
+        return after.get(key, 0.0) - before.get(key, 0.0)
+
+    assert spent(f"{sf_dir}:knn_edges") >= 1.0
+    assert spent(f"{sf_dir}:knn_tri_und") < 1.0
+
+
+def test_aqe_disabled_restores_previous_setting(spark):
+    from async_event_streams_spark.util import aqe_disabled
+
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key, "true")
+    try:
+        spark.conf.set(key, "true")
+        try:
+            with aqe_disabled(spark):
+                assert spark.conf.get(key) == "false"
+                raise RuntimeError("boom")
+        except RuntimeError:
+            pass
+        assert spark.conf.get(key) == "true"
+        spark.conf.set(key, "false")
+        with aqe_disabled(spark):
+            assert spark.conf.get(key) == "false"
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, prev)
 
 
 # ---------------------------------------------------------------------------

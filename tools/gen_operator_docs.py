@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Generate docs/OPERATORS.md: one row per registered query — name,
-defining module:line, oracle coverage, measured sf0.1 seconds, and the
-docstring's first sentence. Run after adding operators; the output is
+defining module:line, oracle coverage, and the docstring's first
+sentence. Run after adding operators; the output is
 committed so users browse the surface without importing Spark.
 
 Usage: python tools/gen_operator_docs.py
@@ -16,12 +16,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from async_event_streams_spark.queries import (  # noqa: E402
-    ORACLES,
-    QUERIES,
-    _BENCH_SEC,
-    _EST_BENCH_SEC,
-)
+from async_event_streams_spark.queries import ORACLES, QUERIES  # noqa: E402
 
 
 def first_sentence(doc: str | None) -> str:
@@ -45,11 +40,9 @@ def main() -> None:
             where = f"{src_file}:{line}"
         except (OSError, TypeError):
             where = "?"
-        sec = _BENCH_SEC.get(name, _EST_BENCH_SEC.get(name))
-        sec_s = f"{sec:.2f}" if sec is not None else "—"
         oracle = "yes" if name in ORACLES else "rows-only"
         rows.append(
-            f"| `{name}` | {where} | {oracle} | {sec_s} | "
+            f"| `{name}` | {where} | {oracle} | "
             f"{first_sentence(fn.__doc__)} |"
         )
     out = [
@@ -57,11 +50,9 @@ def main() -> None:
         "",
         f"{len(QUERIES)} registered queries, {len(ORACLES)} with DuckDB",
         "oracles. Regenerate with `python tools/gen_operator_docs.py`.",
-        "Seconds are the noop-sink min-of-3 at sf0.1 on local[32]",
-        "(BENCH_DETAIL.json).",
         "",
-        "| query | where | oracle | sf0.1 s | summary |",
-        "|---|---|---|---|---|",
+        "| query | where | oracle | summary |",
+        "|---|---|---|---|",
         *rows,
         "",
     ]
