@@ -28,12 +28,9 @@ emitted row in append mode — same caveat every append-mode twin in
 this package documents; the batch lane is the replayable source of
 truth.
 
-Both streaming engines (applyInPandasWithState and Spark 4's
-transformWithStateInPandas) wrap the SAME `_fold_rows` transition —
-the timeseries.py discipline that keeps the port a wiring change.
-
 Stream == batch-twin == registered-query is pinned in
-tests/test_streaming_asof.py; the fold itself is driven Spark-free
+tests/test_streaming_asof.py; the `_fold_rows` transition behind the
+applyInPandasWithState wrapper `_update` is driven Spark-free
 against a brute-force reference (replays, ties, chunk splits) in
 tests/test_asof_fold_properties.py.
 """
@@ -75,7 +72,7 @@ ASOF_STATE_SCHEMA = (
 
 
 def _fold_rows(st: tuple | None, rows) -> tuple[dict, tuple]:
-    """The per-key fold shared by both streaming engines and the
+    """The per-key fold behind `_update`, also driven by the
     Spark-free property tests: (state | None, iterable of
     (t, is_event, sid, eid, okey) in merged-timeline order) →
     (event output columns, new state). `sid` is the per-side id that
@@ -143,62 +140,19 @@ def _update(
         yield _out_frame(key, out)
 
 
-class AsofProcessor:
-    """transformWithStateInPandas wrapper around the same fold (duck-
-    typed off StatefulProcessor for protobuf-free importability — the
-    timeseries.py gate)."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("asof_state", ASOF_STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues=None
-    ) -> Iterator[pd.DataFrame]:
-        pdf = ordered_events(rows, sort_cols=_SORT)
-        it = [] if pdf is None else _rows_from_pdf(pdf)
-        out, new_state = _fold_rows(
-            tuple(self._state.get()) if self._state.exists() else None, it
-        )
-        self._state.update(new_state)
-        if out["event_id"]:
-            yield _out_frame(key, out)
-
-    def close(self) -> None:
-        pass
-
-
-def asof_stream(df: DataFrame, engine: str = "auto") -> DataFrame:
+def asof_stream(df: DataFrame) -> DataFrame:
     """Merged-timeline stream (user_id, t, is_event, sid, eid, okey) →
     one (user_id, event_id, asof_orderkey) row per event. State is
     O(keys): 6 longs per user, regardless of order volume — the reason
     this beats buffering the order side in a stream-stream join at
     100 TB (a whale user's full order history never accumulates in the
     state store; only its maximum survives)."""
-    from .stateful import _protobuf_available
-
-    if engine == "auto":
-        engine = "tws" if _protobuf_available() else "compat"
-    if engine == "compat":
-        return df.groupBy("user_id").applyInPandasWithState(
-            _update,
-            outputStructType=ASOF_OUTPUT_SCHEMA,
-            stateStructType=ASOF_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    if engine != "tws":
-        raise ValueError(f"unknown engine {engine!r} (tws|compat|auto)")
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    cls = type(
-        "AsofStatefulProcessor", (StatefulProcessor,),
-        dict(AsofProcessor.__dict__),
-    )
-    return df.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=cls(),
+    return df.groupBy("user_id").applyInPandasWithState(
+        _update,
         outputStructType=ASOF_OUTPUT_SCHEMA,
+        stateStructType=ASOF_STATE_SCHEMA,
         outputMode="append",
-        timeMode="none",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

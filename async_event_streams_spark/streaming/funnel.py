@@ -54,9 +54,9 @@ _STEPS = ("view", "click", "purchase")
 
 
 def _fold_events(st: tuple | None, events) -> tuple[dict, tuple]:
-    """The per-key transition shared by BOTH streaming engines (the
-    timeseries.py discipline) and driven Spark-free by the property
-    tests: (state tuple | None, iterable of (t_us, eid, etype)) →
+    """The per-key transition behind `_update`, also driven Spark-free
+    by the property tests: (state tuple | None, iterable of
+    (t_us, eid, etype)) →
     (stage-advance output columns, new state tuple)."""
     t1, t2, t3, last_us, last_eid = (
         st if st is not None else (UNSET_US, UNSET_US, UNSET_US, UNSET_US, -1)
@@ -123,60 +123,11 @@ def _update(
         yield _out_frame(key, out)
 
 
-class FunnelProcessor:
-    """transformWithStateInPandas wrapper around the same fold (duck-
-    typed off StatefulProcessor for protobuf-free importability — the
-    timeseries.py gate)."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("funnel_state", FUNNEL_STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues=None
-    ) -> Iterator[pd.DataFrame]:
-        pdf = ordered_events(rows)
-        out, new_state = _fold_events(
-            tuple(self._state.get()) if self._state.exists() else None,
-            _events_from_pdf(pdf),
-        )
-        self._state.update(new_state)
-        if out["stage"]:
-            yield _out_frame(key, out)
-
-    def close(self) -> None:
-        pass
-
-
-def funnel_stage_stream(df: DataFrame, engine: str = "auto") -> DataFrame:
+def funnel_stage_stream(df: DataFrame) -> DataFrame:
     """(user_id, event_type, ts, event_id) stream → one append row per
     stage ADVANCE: (user_id, stage 1..3, reached_at). A user's rows
     are strictly increasing in stage; the latest row is their current
-    funnel position.
-
-    engine="tws" rides transformWithStateInPandas (requires protobuf);
-    "compat" rides applyInPandasWithState; "auto" picks tws when
-    available. Both wrap the SAME `_fold_events` transition."""
-    from .stateful import _protobuf_available
-
-    if engine == "auto":
-        engine = "tws" if _protobuf_available() else "compat"
-    if engine == "tws":
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-        )
-
-        cls = type(
-            "FunnelStatefulProcessor", (StatefulProcessor,),
-            dict(FunnelProcessor.__dict__),
-        )
-        return df.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=cls(),
-            outputStructType=FUNNEL_OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-    if engine != "compat":
-        raise ValueError(f"unknown engine {engine!r} (tws|compat|auto)")
+    funnel position."""
     return df.groupBy("user_id").applyInPandasWithState(
         _update,
         outputStructType=FUNNEL_OUTPUT_SCHEMA,

@@ -1,5 +1,6 @@
 """Shared frame for per-key event-ordered stateful pipes (scd2,
-funnel): Arrow-chunk handling and the FIFO watermark.
+funnel, asof, timeseries): Arrow-chunk handling and the FIFO
+watermark.
 
 A key group larger than `spark.sql.execution.arrow.maxRecordsPerBatch`
 arrives as SEVERAL DataFrames in arbitrary relative order, so the
@@ -18,7 +19,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-# The stateful update closures in scd2.py/funnel.py reference this
+# The stateful updates in scd2/funnel/asof/timeseries reference this
 # module's globals; cloudpickle serializes those BY REFERENCE to the
 # module name, which only resolves on Python workers if the package is
 # importable there — true when the driver runs from the repo root,

@@ -20,10 +20,9 @@ State is O(keys) — one (type, start, last) tuple per user — so the
 pipe holds at any stream length; timestamps live in the state tuple
 as int64 microseconds (simple state-schema types only).
 
-Both streaming engines (applyInPandasWithState and Spark 4's
-transformWithStateInPandas) wrap the SAME `_fold_events` transition —
-the timeseries.py discipline that keeps the engine port a wiring
-change; the property suite drives the fold once for both.
+The applyInPandasWithState wrapper `_update` only unpacks Arrow chunks
+and state around the pure `_fold_events` transition, which the
+property suite drives Spark-free.
 """
 
 from __future__ import annotations
@@ -62,10 +61,9 @@ SCD2_STATE_SCHEMA = (
 
 
 def _fold_events(st: tuple | None, events) -> tuple[dict, tuple]:
-    """The per-key transition shared by BOTH streaming engines
-    (applyInPandasWithState and transformWithStateInPandas — the
-    timeseries.py discipline) and driven Spark-free by the property
-    tests: (state tuple | None, iterable of (t_us, eid, etype)) →
+    """The per-key transition behind `_update`, also driven Spark-free
+    by the property tests: (state tuple | None, iterable of
+    (t_us, eid, etype)) →
     (closed-interval output columns, new state tuple)."""
     cur_type, from_us, last_us, last_eid = (
         st if st is not None else (None, UNSET_US, UNSET_US, -1)
@@ -119,62 +117,15 @@ def _update(
         yield _out_frame(key, out)
 
 
-class Scd2Processor:
-    """transformWithStateInPandas wrapper around the same fold (duck-
-    typed off StatefulProcessor for protobuf-free importability — the
-    timeseries.py gate)."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("scd2_state", SCD2_STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues=None
-    ) -> Iterator[pd.DataFrame]:
-        pdf = ordered_events(rows)
-        out, new_state = _fold_events(
-            tuple(self._state.get()) if self._state.exists() else None,
-            _events_from_pdf(pdf),
-        )
-        self._state.update(new_state)
-        if out["type"]:
-            yield _out_frame(key, out)
-
-    def close(self) -> None:
-        pass
-
-
-def scd2_intervals_stream(df: DataFrame, engine: str = "auto") -> DataFrame:
+def scd2_intervals_stream(df: DataFrame) -> DataFrame:
     """(user_id, event_type, ts, event_id) stream → closed SCD2
     interval rows [valid_from, valid_to). The OPEN interval per key is
     state, not output — append-mode downstream sinks only ever see
-    finalized history rows (emitting the open row would retract).
-
-    engine="tws" rides transformWithStateInPandas (requires protobuf);
-    "compat" rides applyInPandasWithState; "auto" picks tws when
-    available. Both wrap the SAME `_fold_events` transition."""
-    from .stateful import _protobuf_available
-
-    if engine == "auto":
-        engine = "tws" if _protobuf_available() else "compat"
-    if engine == "compat":
-        return df.groupBy("user_id").applyInPandasWithState(
-            _update,
-            outputStructType=SCD2_OUTPUT_SCHEMA,
-            stateStructType=SCD2_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    if engine != "tws":
-        raise ValueError(f"unknown engine {engine!r} (tws|compat|auto)")
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    cls = type(
-        "Scd2StatefulProcessor", (StatefulProcessor,),
-        dict(Scd2Processor.__dict__),
-    )
-    return df.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=cls(),
+    finalized history rows (emitting the open row would retract)."""
+    return df.groupBy("user_id").applyInPandasWithState(
+        _update,
         outputStructType=SCD2_OUTPUT_SCHEMA,
+        stateStructType=SCD2_STATE_SCHEMA,
         outputMode="append",
-        timeMode="none",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

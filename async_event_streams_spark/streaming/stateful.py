@@ -1,5 +1,4 @@
-"""Custom stateful streaming operators via applyInPandasWithState and
-transformWithStateInPandas.
+"""Custom stateful streaming operators via applyInPandasWithState.
 
 Re-expresses the reference's stateful max-merge sink
 (/root/reference/tests/fizz_buzz.rs:31-43: `set_value` keeps the max
@@ -58,7 +57,7 @@ def running_max_by_key(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Sessionization via transformWithStateInPandas (Spark 4 state API v2)
+# Sessionization
 # ---------------------------------------------------------------------------
 
 SESSION_OUTPUT_SCHEMA = (
@@ -66,43 +65,21 @@ SESSION_OUTPUT_SCHEMA = (
 )
 
 
-def _protobuf_available() -> bool:
-    """transformWithStateInPandas speaks to the JVM state server over
-    protobuf; absent in this container, so the v2 path is gated."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def sessionize(
-    df: DataFrame, gap_seconds: float = 1800.0, engine: str = "auto"
-) -> DataFrame:
+def sessionize(df: DataFrame, gap_seconds: float = 1800.0) -> DataFrame:
     """Emit COMPLETED sessions per user: a session closes when the next
-    event arrives more than `gap_seconds` after the previous one. The
+    event arrives `gap_seconds` or more after the previous one. The
     open session is held in per-key state (O(keys)) across
     micro-batches; closure is driven by event time in the data, so the
     operator is deterministic (no wall-clock timers).
 
-    engine="tws" uses transformWithStateInPandas (the v2 arbitrary-state
-    API: typed state handles, RocksDB-backed) — requires protobuf;
-    engine="compat" uses applyInPandasWithState with identical
-    semantics; "auto" picks tws when available.
+    Ordering contract: a row that arrives in a later micro-batch with
+    a `ts_sec` inside the open session's [start, last] span joins it
+    without moving `last`, which is the answer sorting the whole
+    stream would give. A row before the open session's `start` is a
+    per-key FIFO violation and is dropped, as scd2/funnel/asof/
+    timeseries drop theirs: the session it belonged to may already
+    have been emitted, and append mode cannot retract it.
     """
-    if engine == "auto":
-        engine = "tws" if _protobuf_available() else "compat"
-    if engine == "compat":
-        return _sessionize_compat(df, gap_seconds)
-    if engine != "tws":
-        raise ValueError(f"unknown engine {engine!r} (tws|compat|auto)")
-    return _sessionize_tws(df, gap_seconds)
-
-
-def _sessionize_compat(df: DataFrame, gap_seconds: float) -> DataFrame:
-    """applyInPandasWithState sessionizer (same semantics as the tws
-    path; works without protobuf)."""
 
     def update(
         key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
@@ -118,11 +95,13 @@ def _sessionize_compat(df: DataFrame, gap_seconds: float) -> DataFrame:
         for ts, v in events:
             if cur is None:
                 cur = (ts, ts, 1, v)
+            elif ts < cur[0]:
+                continue  # per-key FIFO contract violation: drop
             elif ts - cur[1] >= gap_seconds:
                 completed.append(cur)
                 cur = (ts, ts, 1, v)
             else:
-                cur = (cur[0], ts, cur[2] + 1, cur[3] + v)
+                cur = (cur[0], max(cur[1], ts), cur[2] + 1, cur[3] + v)
         if cur is not None:
             state.update(cur)
         if completed:
@@ -139,123 +118,6 @@ def _sessionize_compat(df: DataFrame, gap_seconds: float) -> DataFrame:
         update,
         outputStructType=SESSION_OUTPUT_SCHEMA,
         stateStructType="start double, last double, n int, total double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _sessionize_tws(df: DataFrame, gap_seconds: float) -> DataFrame:
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class Sessionizer(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "open_session", "start double, last double, n int, total double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            events: list[tuple[float, float]] = []
-            for pdf in rows:
-                events.extend(
-                    zip(pdf["ts_sec"].astype(float), pdf["value"].astype(float))
-                )
-            events.sort()
-            cur = self._state.get() if self._state.exists() else None
-            completed = []
-            for ts, v in events:
-                if cur is None:
-                    cur = (ts, ts, 1, v)
-                elif ts - cur[1] >= gap_seconds:
-                    completed.append(cur)
-                    cur = (ts, ts, 1, v)
-                else:
-                    cur = (cur[0], ts, cur[2] + 1, cur[3] + v)
-            if cur is not None:
-                self._state.update(cur)
-            if completed:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]] * len(completed),
-                        "session_start": [c[0] for c in completed],
-                        "n_events": [c[2] for c in completed],
-                        "total": [c[3] for c in completed],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=Sessionizer(),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Bounded-frame EWMA (round 9): per-key SLIDING-FRAME state
-# ---------------------------------------------------------------------------
-
-EWMA_L = 8  # must track relational.c_ewma's frame
-
-EWMA_OUTPUT_SCHEMA = "user_id long, event_id long, x_micro long, ewma_pico long"
-# state = the last (up to) 8 (event_id, x_micro) pairs, oldest first —
-# the one state family the max-merge (1 tuple) and dedup (set) shapes
-# don't cover: a bounded DEQUE per key.
-EWMA_STATE_SCHEMA = "event_ids array<long>, xs array<long>"
-
-
-def streaming_ewma(df: DataFrame) -> DataFrame:
-    """Streaming twin of `c_ewma`: per-user decay-1/2 EWMA over the
-    last EWMA_L events, emitted for EVERY input row with the exact
-    integer arithmetic of the batch query (power-of-two weights,
-    (num·10^6) DIV den — a replay reproduces identical outputs).
-
-    State is a bounded deque of the last EWMA_L (event_id, value)
-    pairs per key — O(keys · L), the frame-operator state class; the
-    store checkpoints it, so the frame survives restarts mid-window.
-    Rows are folded in event_id order WITHIN each batch; cross-batch
-    order is the arrival order, matching the batch query whenever the
-    stream delivers per-key rows in event order (the topic FIFO
-    guarantee)."""
-
-    def update(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        ids, xs = state.get if state.exists else ([], [])
-        ids, xs = list(ids), list(xs)
-        out_rows = []
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values("event_id")
-            for eid, x in zip(pdf["event_id"], pdf["x_micro"]):
-                ids.append(int(eid))
-                xs.append(int(x))
-                ids, xs = ids[-EWMA_L:], xs[-EWMA_L:]
-                num = sum(v * (1 << i) for i, v in enumerate(xs))
-                den = (1 << len(xs)) - 1
-                # SQL DIV truncation, not Python floor — they differ
-                # on negative numerators (see timeseries._trunc_div)
-                q = abs(num * 1_000_000) // den
-                out_rows.append(
-                    (key[0], int(eid), int(x), q if num >= 0 else -q)
-                )
-        state.update((ids, xs))
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows,
-                columns=["user_id", "event_id", "x_micro", "ewma_pico"],
-            )
-
-    return df.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -43,11 +43,6 @@ Ordering contract: per-key FIFO by event_id (the topic layer's
 SURVEY §8-H5 guarantee); an out-of-order event_id is a contract
 violation upstream, dropped defensively exactly as scd2.py does.
 
-`streaming/stateful.py`'s `streaming_ewma` is the older single-metric
-twin (EWMA only, no FIFO watermark); this pass computes all five
-family metrics from ONE state tuple and one shuffle — the production
-lane. Both stay tested.
-
 Stream==batch is asserted wave-by-wave (incl. a mid-stream restart on
 a durable sink + checkpoint) in tests/test_streaming_timeseries.py,
 against batch twins that are themselves asserted equal to the five
@@ -112,13 +107,10 @@ def _trunc_div(n: int, d: int) -> int:
 
 
 def _fold_events(st: tuple | None, events) -> tuple[dict, tuple]:
-    """The per-key fold — ONE transition shared verbatim by both
-    streaming engines (applyInPandasWithState and
-    transformWithStateInPandas) and driven Spark-free by the property
-    tests: (state tuple | None, iterable of (event_id, x_micro)) →
-    (per-event output columns, new state tuple). Keeping the fold
-    engine-agnostic is what makes the tws port a wiring change, not a
-    second implementation to diverge."""
+    """The per-key fold behind `_update`, also driven Spark-free by
+    the property tests: (state tuple | None, iterable of
+    (event_id, x_micro)) → (per-event output columns, new state
+    tuple)."""
     if st is not None:
         deque = [int(v) for v in st[:FRAME_L]][: int(st[FRAME_L])]
         peak, prev_ewma, last_eid, n_seen = (
@@ -216,73 +208,16 @@ def _update(
         yield _out_frame(key, out)
 
 
-class TimeseriesProcessor:
-    """The transformWithStateInPandas wrapper around `_fold_events`
-    (Spark 4 state API v2: typed ValueState handle, RocksDB-backed,
-    timers/TTL available). Duck-typed rather than subclassing
-    StatefulProcessor so the transition is testable without protobuf
-    (the v2 engine's Python<->JVM state server dependency — absent in
-    this container, same gate as streaming/stateful.sessionize);
-    `timeseries_stream(engine="tws")` wires it in where available."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("ts_state", TS_STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues=None
-    ) -> Iterator[pd.DataFrame]:
-        pdf = ordered_events(rows, sort_cols=("event_id",))
-        events = [] if pdf is None else zip(pdf["event_id"], pdf["x_micro"])
-        out, new_state = _fold_events(
-            tuple(self._state.get()) if self._state.exists() else None,
-            events,
-        )
-        self._state.update(new_state)
-        if out["event_id"]:
-            yield _out_frame(key, out)
-
-    def close(self) -> None:
-        pass
-
-
-def timeseries_stream(df: DataFrame, engine: str = "auto") -> DataFrame:
+def timeseries_stream(df: DataFrame) -> DataFrame:
     """(user_id, event_id, x_micro) stream → one enriched row per
     event with every frame-local time-series metric (see module doc).
-    State is O(keys): FRAME_L values + 4 scalars per user.
-
-    engine="tws" rides transformWithStateInPandas (requires protobuf);
-    "compat" rides applyInPandasWithState; "auto" picks tws when
-    available. Both wrap the SAME `_fold_events` transition, so the
-    engines cannot diverge semantically — the property suite drives
-    the fold once for both."""
-    from .stateful import _protobuf_available
-
-    if engine == "auto":
-        engine = "tws" if _protobuf_available() else "compat"
-    if engine == "compat":
-        return df.groupBy("user_id").applyInPandasWithState(
-            _update,
-            outputStructType=TS_OUTPUT_SCHEMA,
-            stateStructType=TS_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    if engine != "tws":
-        raise ValueError(f"unknown engine {engine!r} (tws|compat|auto)")
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # Graft the duck-typed processor onto the abstract base the v2 API
-    # type-checks for (kept separate so the class imports cleanly in
-    # containers without protobuf).
-    cls = type(
-        "TimeseriesStatefulProcessor", (StatefulProcessor,),
-        dict(TimeseriesProcessor.__dict__),
-    )
-    return df.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=cls(),
+    State is O(keys): FRAME_L values + 4 scalars per user."""
+    return df.groupBy("user_id").applyInPandasWithState(
+        _update,
         outputStructType=TS_OUTPUT_SCHEMA,
+        stateStructType=TS_STATE_SCHEMA,
         outputMode="append",
-        timeMode="none",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

@@ -8,6 +8,9 @@ a cluster bill.
 
 from __future__ import annotations
 
+import importlib.util
+import os
+
 import pytest
 
 from async_event_streams_spark.queries import QUERIES
@@ -1037,3 +1040,36 @@ def test_dedup_near_band_join_is_slim(spark, sf_dir):
     for line in plan.splitlines():
         if "bk" in line and "Project" in line:
             assert " sh#" not in line, line
+
+
+def _normalize_plan():
+    spec = importlib.util.spec_from_file_location(
+        "dump_plans",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "dump_plans.py"),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.normalize_plan
+
+
+_PLAN = """\
+(3) Exchange
+Input [2]: [user_id#{a}L, ts#{b}]
+Arguments: hashpartitioning(user_id#{a}L, 4), ENSURE_REQUIREMENTS, [plan_id={p}]
+(4) {op}
+Arguments: MapPartitionsRDD[{r}] at localCheckpoint at NativeMethodAccessorImpl.java:0
+"""
+
+
+def test_normalize_plan_masks_only_per_process_counters():
+    """Two dumps of one plan from different processes differ only in
+    expression ids, Exchange plan ids and RDD ids; those must compare
+    equal after masking, while an operator change must still show."""
+    norm = _normalize_plan()
+    one = _PLAN.format(a=12, b=13, p=101, r=7, op="Sort")
+    two = _PLAN.format(a=480, b=481, p=2210, r=93, op="Sort")
+    assert one != two
+    assert norm(one) == norm(two)
+    assert "plan_id=N" in norm(one) and "RDD[N]" in norm(one)
+    other = _PLAN.format(a=12, b=13, p=101, r=7, op="HashAggregate")
+    assert norm(one) != norm(other)

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from async_event_streams_spark.streaming import (
     run_stream_to_memory,
     running_max_by_key,
+    sessionize,
     tumbling_counts,
 )
 from async_event_streams_spark.tables import table
@@ -133,6 +134,73 @@ def test_stateful_running_max_converges_to_batch(spark, sf_dir, topic_root):
             ).collect()
         }
         assert got == batch_expected
+    finally:
+        t.close()
+
+
+def test_sessionize_across_batches(spark, tmp_path):
+    """Completed sessions emit exactly when an event-time gap closes
+    them, with the open session held in state across micro-batches.
+    User 3's rows arrive out of event-time order across batches: a row
+    inside the open session's span must not move its end back, and a
+    row before its start is dropped."""
+    t = Topic(
+        spark,
+        "sess2",
+        "user_id long, ts_sec double, value double",
+        str(tmp_path / "topics"),
+        TopicRegistry(),
+    )
+    stream = t.subscribe().select("user_id", "ts_sec", "value")
+    query, tbl = run_stream_to_memory(
+        sessionize(stream, gap_seconds=60.0), output_mode="append"
+    )
+    t.attach_query(query)
+    try:
+        # batch 1: two events 10s apart (one open session)
+        t.send([
+            {"user_id": 1, "ts_sec": 1000.0, "value": 1.0},
+            {"user_id": 1, "ts_sec": 1010.0, "value": 2.0},
+            {"user_id": 3, "ts_sec": 1000.0, "value": 1.0},
+            {"user_id": 3, "ts_sec": 1050.0, "value": 2.0},
+        ])
+        assert spark.sql(f"SELECT * FROM {tbl}").count() == 0  # still open
+
+        # batch 2: event 100s later -> closes session #1 (across batches!)
+        t.send([
+            {"user_id": 1, "ts_sec": 1110.0, "value": 4.0},
+            {"user_id": 3, "ts_sec": 1020.0, "value": 4.0},
+        ])
+        rows = spark.sql(f"SELECT * FROM {tbl}").collect()
+        assert len(rows) == 1
+        s = rows[0]
+        assert (s.user_id, s.session_start, s.n_events, s.total) == (1, 1000.0, 2, 3.0)
+
+        # batch 3: two users interleaved; user 1 closes again, user 2
+        # stays open; user 3's gaps by event time are 20/30/50 s, so its
+        # session stays open too
+        t.send([
+            {"user_id": 1, "ts_sec": 1300.0, "value": 8.0},
+            {"user_id": 2, "ts_sec": 1300.0, "value": 16.0},
+            {"user_id": 3, "ts_sec": 1100.0, "value": 8.0},
+        ])
+        rows = {(r.user_id, r.session_start): (r.n_events, r.total)
+                for r in spark.sql(f"SELECT * FROM {tbl}").collect()}
+        assert rows == {(1, 1000.0): (2, 3.0), (1, 1110.0): (1, 4.0)}
+
+        # batch 4: 990 precedes user 3's open session (dropped); 1200
+        # closes the session
+        t.send([
+            {"user_id": 3, "ts_sec": 990.0, "value": 16.0},
+            {"user_id": 3, "ts_sec": 1200.0, "value": 32.0},
+        ])
+        rows = {(r.user_id, r.session_start): (r.n_events, r.total)
+                for r in spark.sql(f"SELECT * FROM {tbl}").collect()}
+        assert rows == {
+            (1, 1000.0): (2, 3.0),
+            (1, 1110.0): (1, 4.0),
+            (3, 1000.0): (4, 15.0),
+        }
     finally:
         t.close()
 
